@@ -61,14 +61,12 @@ def daily_sessions_job(
         time_col=time_col,
         min_rows=min_rows,
     ).withColumnRenamed("session_start", "datetime")
-    n = sessions.count()
-    if n == 0:
-        return {"sessions": 0, "inserted": 0, "updated": 0}
     m = merge_upsert(
         spark, target_path, sessions, keys=[*keys, "datetime"],
         audit_col="updated_at",
     )
-    return {"sessions": n, **m}
+    # session keys are unique, so every session is inserted or updated
+    return {"sessions": m["inserted"] + m["updated"], **m}
 
 
 def option_ohlc_stats(spark: SparkSession, target_path: str) -> dict:
@@ -108,14 +106,13 @@ def option_ohlc_job(
     cutoff = now - timedelta(hours=hours_back)
     window = trades.where(F.col("timestamp") >= F.lit(cutoff))
     agg = option_ohlc_hourly(window)
-    n = agg.count()
-    if n:
-        merge_upsert(
-            spark, target_path, agg, keys=["hour_timestamp", "instrument_name"]
-        )
+    m = merge_upsert(
+        spark, target_path, agg, keys=["hour_timestamp", "instrument_name"]
+    )
     after = option_ohlc_stats(spark, target_path)
     return {
-        "aggregated_rows": n,
+        # (hour, instrument) keys are unique, so every row is merged
+        "aggregated_rows": m["inserted"] + m["updated"],
         "before": before,
         "after": after,
         "new_records": after["total_records"] - before["total_records"],
@@ -151,14 +148,11 @@ def _chained_sessions_job(
         min_rows=min_rows,
     )
     sessions = sessions.drop("datetime").withColumnRenamed("session_start", "datetime")
-    n = sessions.count()
-    if n == 0:
-        return {"sessions": 0, "inserted": 0, "updated": 0}
     m = merge_upsert(
         spark, target_path, sessions, keys=["instrument", "datetime"],
         audit_col="updated_at",
     )
-    return {"sessions": n, **m}
+    return {"sessions": m["inserted"] + m["updated"], **m}
 
 
 def weekly_sessions_job(

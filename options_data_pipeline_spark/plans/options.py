@@ -290,12 +290,15 @@ FROM chain GROUP BY expiry
 def q_iv_smile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IV smile: null-skipping average implied vol per (expiry, strike)
     with quote counts and traded volume — the P5 null-skip over the
-    derived chain, decimal-exact mean (sum/count, one division)."""
+    derived chain: decimal-exact sum, one double division. The division
+    runs in double because DuckDB's ``DECIMAL / BIGINT`` is a DOUBLE
+    quotient; a decimal quotient would round HALF_UP to scale 6 first and
+    split the engines on means that land halfway at the 7th decimal."""
     c = _chain(spark, sf_dir)
     iv_sum = F.sum(F.col("iv").cast("decimal(38,6)"))
     n_iv = F.count(F.col("iv"))
     return c.groupBy("expiry", "strike").agg(
-        round_half_away((iv_sum / n_iv).cast("double"), 6).alias("avg_iv"),
+        round_half_away(iv_sum.cast("double") / n_iv, 6).alias("avg_iv"),
         n_iv.alias("n_iv_quotes"),
         dec_sum(F.col("amount")).alias("volume"),
     )

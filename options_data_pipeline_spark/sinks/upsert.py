@@ -209,13 +209,21 @@ def merge_upsert(
     (``monotonically_increasing_id``), which is deterministic only for
     single-partition driver-built batches; a shuffled/joined updates frame
     should always pass ``order_by``.
+
+    The deduped updates are evaluated exactly once: an eager
+    ``localCheckpoint`` materialises them before any other action, so the
+    emptiness probe, the join and the write below all read the
+    checkpointed rows (``monotonically_increasing_id`` could otherwise
+    re-evaluate differently, and every action would recompute the
+    upstream plan). Empty updates return ``{"inserted": 0, "updated": 0}``
+    without touching the target: it is neither rewritten nor, on a cold
+    start, created.
     """
     if audit_col:
         updates = updates.withColumn(audit_col, F.current_timestamp())
-    updates = dedupe_last_wins(updates, keys, order_by)
-    # One evaluation of the dedup across the count/join/write actions below
-    # (monotonically_increasing_id could otherwise re-evaluate differently).
-    updates = updates.localCheckpoint(eager=False)
+    updates = dedupe_last_wins(updates, keys, order_by).localCheckpoint()
+    if updates.isEmpty():
+        return {"inserted": 0, "updated": 0}
     current = _read_target(spark, target_path)
     if current is None:
         n = updates.count()
@@ -270,24 +278,29 @@ def insert_if_absent(
 ) -> dict[str, int]:
     """Append only rows whose key is not yet present (reference K2,
     ``ON CONFLICT DO NOTHING`` on trade_id, deribit.py:83-137). Returns
-    ``{"inserted": n, "skipped": m}``."""
+    ``{"inserted": n, "skipped": m}``.
+
+    The rows to insert (``fresh``: the in-batch dedup, anti-joined
+    against the target's keys) are evaluated exactly once: an eager
+    ``localCheckpoint`` materialises them, and the count and the write
+    both read the checkpoint instead of re-running the anti-join."""
     total = batch.count()
     # in-batch dedup: first occurrence wins (DO NOTHING keeps the first);
     # deduped-away rows count as skipped, like rowcount under DO NOTHING
     w = Window.partitionBy(*keys).orderBy(F.monotonically_increasing_id().asc())
-    batch = (
+    fresh = (
         batch.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
     current = _read_target(spark, target_path)
-    if current is None:
-        n = batch.count()
-        _atomic_replace(batch, target_path)
-        return {"inserted": n, "skipped": total - n}
-    fresh = batch.join(current.select(*keys).distinct(), keys, "left_anti")
+    if current is not None:
+        fresh = fresh.join(current.select(*keys).distinct(), keys, "left_anti")
+    fresh = fresh.localCheckpoint()
     n = fresh.count()
-    if n:
+    if current is None:
+        _atomic_replace(fresh, target_path)
+    elif n:
         # append-only: no rewrite of existing data, scales with the batch
         fresh.select(current.columns).write.mode("append").parquet(target_path)
     return {"inserted": n, "skipped": total - n}

@@ -3,10 +3,18 @@
 The reference's collectors poll exchange REST APIs row-by-row into
 PostgreSQL (src/pipeline/collectors/{binance,binance_1m,hyperliquid,
 deribit}.py). In a Spark engine, ingestion is a *driver-side* concern:
-fetch bounded batches over HTTP, parse to rows, ``createDataFrame`` with
-an explicit schema, and hand the DataFrame to a keyed sink
-(:mod:`..sinks.upsert`). Pagination, retry, and rate limiting live here;
-nothing below this layer touches the network.
+fetch bounded batches over HTTP, parse to rows, and hand them to a keyed
+sink (:mod:`..sinks.upsert`) as a DataFrame. Pagination, retry, and rate
+limiting live here; nothing below this layer touches the network.
+
+``to_df`` packs a batch into a ``pyarrow.Table`` typed by the adapter's
+Spark schema and passes the table to ``createDataFrame``. The JVM decodes
+it into a local relation, so every action over the batch runs as plain
+JVM tasks: a Python-row ``createDataFrame`` is backed by a PythonRDD and
+pays a Python worker round trip on *each* action over the frame. The
+arrow schema carries UTC-aware timestamps, so the naive-UTC datetimes the
+adapters parse are stored as the instants they name whatever the host's
+timezone (Python-row conversion reads naive datetimes in local time).
 
 Every adapter takes an injectable ``transport`` callable
 (``transport(url, payload-or-None) -> parsed JSON``) so tests (and
@@ -33,7 +41,6 @@ import time
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 Transport = Callable[[str, dict | None], object]
@@ -84,6 +91,17 @@ TRADE_SCHEMA = T.StructType(
 )
 
 
+def _rows_to_df(
+    spark: SparkSession, rows: Sequence[dict], schema: T.StructType
+) -> DataFrame:
+    """An Arrow-backed DataFrame of ``rows`` with exactly ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(list(rows), schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def _ms_to_dt(ms: int):
     from datetime import datetime, timezone
 
@@ -127,7 +145,7 @@ class KlinesSource:
         ]
 
     def to_df(self, spark: SparkSession, rows: Sequence[dict]) -> DataFrame:
-        return spark.createDataFrame(list(rows), KLINE_SCHEMA)
+        return _rows_to_df(spark, rows, KLINE_SCHEMA)
 
 
 class CandleSnapshotSource:
@@ -281,7 +299,7 @@ class OptionTradesSource:
                 time.sleep(self.rate_limit_s)
 
     def to_df(self, spark: SparkSession, rows: Sequence[dict]) -> DataFrame:
-        return spark.createDataFrame(list(rows), TRADE_SCHEMA)
+        return _rows_to_df(spark, rows, TRADE_SCHEMA)
 
 
 def with_parsed_instrument(trades: DataFrame) -> DataFrame:

@@ -86,6 +86,24 @@ def test_option_ohlc_job_trailing_window_and_stats(spark, tmp_path):
     # rerun converges, delta reports 0 new
     out2 = option_ohlc_job(spark, _trades(spark, 6), t, hours_back=3, now=now)
     assert out2["new_records"] == 0
+    # a window past every trade aggregates nothing and leaves the table as is
+    out3 = option_ohlc_job(spark, _trades(spark, 6), t, hours_back=3,
+                           now=now + dt.timedelta(days=1))
+    assert out3["aggregated_rows"] == 0 and out3["new_records"] == 0
+    assert out3["after"] == out3["before"]
+
+
+def test_daily_sessions_job_without_qualifying_hours(spark, tmp_path):
+    t = str(tmp_path / "daily")
+    now = EPOCH + dt.timedelta(days=3)
+    # 19 hours a day never pass the >=20h guard
+    m = daily_sessions_job(spark, _hourly(spark, 2, hours_per_day=19), t, now=now)
+    assert m == {"sessions": 0, "inserted": 0, "updated": 0}
+    daily_sessions_job(spark, _hourly(spark, 2), t, now=now)
+    m2 = daily_sessions_job(spark, _hourly(spark, 2).where(
+        F.col("bucket_ts") < EPOCH + dt.timedelta(hours=19)), t, now=now)
+    assert m2 == {"sessions": 0, "inserted": 0, "updated": 0}
+    assert spark.read.parquet(t).count() == 2
 
 
 def test_weekly_monthly_chained_jobs(spark, tmp_path):

@@ -228,6 +228,43 @@ def test_trades_cursor_is_host_timezone_independent():
     assert len(rows) == 1
 
 
+def test_to_df_stores_utc_instants_whatever_the_host_timezone(spark):
+    """Regression: the adapters parse naive-UTC datetimes, and ``to_df``
+    must store the instants they name. A Python-row ``createDataFrame``
+    reads naive datetimes in the host's local time, which shifted every
+    timestamp by the UTC offset (2024-01-01 00:00 stored as 05:00 UTC
+    under America/New_York)."""
+    import os
+    import time as _time
+
+    from options_data_pipeline_spark.sources.rest import KLINE_SCHEMA, TRADE_SCHEMA
+
+    epoch_s = int(_ms(EPOCH) / 1000)
+    kline = synth_candle(0)
+    trade = {
+        "trade_id": "1", "ts": EPOCH, "instrument_name": "BTC-26JAN24-40000-C",
+        "price": 0.05, "amount": 1.0, "iv": None, "mark_price": None,
+        "index_price": None, "direction": "buy", "tick_direction": 0,
+    }
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    _time.tzset()
+    try:
+        klines = KlinesSource().to_df(spark, [kline])
+        trades = OptionTradesSource().to_df(spark, [trade])
+        got_k = klines.select(F.unix_timestamp("open_time")).first()[0]
+        got_t = trades.select(F.unix_timestamp("ts")).first()[0]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = old_tz
+        _time.tzset()
+    assert klines.schema == KLINE_SCHEMA and trades.schema == TRADE_SCHEMA
+    assert got_k == epoch_s == 1704067200
+    assert got_t == epoch_s
+
+
 def test_lifecycle_twin_exercises_t2_mutation(spark):
     """The collection_lifecycle_twin must genuinely exercise the T2
     lookback repair: the wave-1 provisional trailing candle (built from

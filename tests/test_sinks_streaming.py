@@ -58,6 +58,28 @@ def test_merge_upsert_last_wins_within_batch(spark, tmp):
     assert [r.v for r in spark.read.parquet(t).collect()] == ["new"]
 
 
+def test_merge_upsert_empty_updates_leave_target_untouched(spark, tmp):
+    import os
+
+    t = f"{tmp}/t"
+    merge_upsert(spark, t, _df(spark, [(1, "a"), (2, "b")]), ["k"])
+
+    def listing():
+        paths = [os.path.join(d, f) for d, _, files in os.walk(t) for f in files]
+        return sorted((p, os.stat(p).st_mtime_ns) for p in paths)
+
+    before = listing()
+    m = merge_upsert(spark, t, _df(spark, []), ["k"], audit_col="updated_at")
+    assert m == {"inserted": 0, "updated": 0}
+    assert listing() == before
+    assert sorted(r.k for r in spark.read.parquet(t).collect()) == [1, 2]
+    # a cold start with nothing to write creates no table
+    assert merge_upsert(spark, f"{tmp}/cold", _df(spark, []), ["k"]) == {
+        "inserted": 0, "updated": 0,
+    }
+    assert not os.path.exists(f"{tmp}/cold")
+
+
 def test_insert_if_absent(spark, tmp):
     t = f"{tmp}/t"
     r1 = insert_if_absent(spark, t, _df(spark, [(1, "a"), (1, "dup"), (2, "b")]), ["k"])
